@@ -22,7 +22,13 @@ from pyspark.sql import functions as F
 from ..core.oneshot import ExampleArtifacts
 from ..ops.kg import entity_degrees, temporal_triples, triple_confidence
 from .canonicalize import canonicalize
-from .checkpoint import MANIFEST, StageRunner
+from .checkpoint import (
+    StageRunner,
+    commit_snapshot,
+    input_identity,
+    read_manifest,
+    read_snapshot,
+)
 from .extract import assemble_docs, detect_mentions
 from .linking import link_mentions
 
@@ -72,8 +78,13 @@ def run_pipeline(
     with_beliefs: bool = False,
 ) -> StageRunner:
     """Full checkpointed run; returns the StageRunner (stage dfs +
-    metrics).  Fingerprint covers the extraction config so changing any
-    parameter invalidates downstream snapshots.
+    metrics).  The run fingerprint covers the extraction config, the
+    strategies, and the file identity (path, size, mtime) of the
+    ``transcripts``, ``tagged_transcripts`` and ``dictionary`` tables,
+    so changing any parameter or rewriting an input file invalidates
+    the snapshots of an old ``work_dir``.  An input built in memory
+    (``createDataFrame``) reads no files: its contents are NOT covered,
+    so give such a run a fresh ``work_dir`` when its rows change.
 
     ``assemble_strategy="join"`` keeps assembly shuffle-free over
     co-bucketed input tables (sources/bucketed.py); the default union
@@ -93,6 +104,11 @@ def run_pipeline(
             "n_seeds": len(artifacts.seeds),
             "linking": linking_strategy,
             "assemble": assemble_strategy,
+            "inputs": {
+                "transcripts": input_identity(transcripts),
+                "tagged_transcripts": input_identity(tagged_transcripts),
+                "dictionary": input_identity(dictionary),
+            },
         },
     )
     docs = runner.stage(
@@ -197,20 +213,22 @@ def upsert_beliefs(
     recompute on append-only batches — the shape a watermarked ingest
     guarantees).
 
-    Each snapshot is rewritten via tmp-write + atomic directory
-    rename (one parquet encode, no read-back rewrite, no stale tmp
-    left behind; Iceberg snapshot commit in the production profile),
-    the merged frame is projected back to the stage's FRESH-RUN
-    schema (so a resumed pipeline sees the same columns either way),
-    and the stage's ``_MANIFEST.json`` row/partition counts are
-    refreshed so ``StageRunner.metrics()`` and lineage describe the
-    post-upsert store.
+    Each snapshot is committed through ``checkpoint.commit_snapshot``,
+    the routine a fresh ``StageRunner`` stage uses (Iceberg snapshot
+    commit in the production profile): stale manifest removed, merged
+    snapshot written to a sibling temp dir and swapped in, manifest
+    rewritten last with footer-read ``rows`` / ``partition_rows`` and
+    the new schema — so ``StageRunner.metrics()`` and lineage describe
+    the post-upsert store, and a kill mid-commit leaves a cache miss.
+    The old snapshot is read with its manifest's schema, so each
+    snapshot's write is the only Spark job the upsert runs.  The merged
+    beliefs are projected back to the stage's FRESH-RUN columns (so a
+    resumed pipeline sees the same columns either way).  A store
+    without manifests is upserted without one.
 
     Returns (beliefs, temporal) DataFrames of the upserted stores.
     """
-    import json
     import os
-    import shutil
     import time
 
     from ..ops.kg import merge_beliefs, merge_temporal
@@ -238,28 +256,16 @@ def upsert_beliefs(
             ),
         ),
     ):
-        data = os.path.join(work_dir, name, "data")
-        old = spark.read.parquet(data)
-        merged = fold(old)
-        tmp = os.path.join(work_dir, name, "data_upsert")
-        merged.write.mode("overwrite").partitionBy("pred").parquet(tmp)
-        shutil.rmtree(data)
-        os.replace(tmp, data)
-        refreshed = spark.read.parquet(data)
-        manifest_path = os.path.join(work_dir, name, MANIFEST)
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                manifest = json.load(f)
-            manifest["rows"] = refreshed.count()
-            manifest["partition_rows"] = {
-                str(r["pred"]): r["count"]
-                for r in refreshed.groupBy("pred").count().collect()
-            }
+        stage_dir = os.path.join(work_dir, name)
+        manifest = read_manifest(stage_dir)
+        merged = fold(read_snapshot(spark, stage_dir, manifest))
+        if manifest is not None:
             manifest["upserted_at"] = time.strftime(
                 "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
             )
-            with open(manifest_path, "w") as f:
-                json.dump(manifest, f, indent=2)
+        refreshed, _ = commit_snapshot(
+            spark, merged, stage_dir, ["pred"], manifest
+        )
         out.append(refreshed)
     return out[0], out[1]
 

@@ -11,6 +11,7 @@ from coies_spark.core.metrics import triple_prf
 from coies_spark.core.oneshot import emissions_to_triples, oracle_extract_doc
 from coies_spark.data import synth
 from coies_spark.pipeline.canonicalize import canonicalize
+from coies_spark.pipeline.checkpoint import StageRunner
 from coies_spark.pipeline.extract import assemble_docs, extract_mentions
 from coies_spark.pipeline.linking import build_dictionary, link_mentions
 from coies_spark.pipeline.triples import conv_triples, run_pipeline
@@ -164,6 +165,9 @@ class TestResumability:
                 "subj", "pred", "obj").collect())
         )
         assert first == second
+        # a resumed stage reads with the schema the fresh run committed
+        for name, res in r1.results.items():
+            assert r2.results[name].df.schema == res.df.schema, name
         # parity of the checkpointed output vs oracle
         want = oracle_triples(corpus, artifacts)
         m = triple_prf(second, want)
@@ -214,6 +218,140 @@ class TestResumability:
         metrics = r.metrics().collect()
         assert {m.stage for m in metrics} >= {"s1_docs", "s2_mentions",
                                               "s5_triples"}
+
+        # footer-read counts equal a groupBy over the snapshot, for
+        # partition values Spark writes as the null default or escapes
+        cols = ["pred", "n"]
+        odd = spark.createDataFrame(
+            [("a", "x y", 1), ("b", None, 1), ("c", "p/q=r s", 2),
+             ("d", "p/q=r s", 2), ("e", "", 3), ("f", "x y", 3)],
+            "k string, pred string, n int",
+        )
+        fresh = StageRunner(spark, f"{work}/odd", {})
+        snap = fresh.stage("odd", lambda: odd, partition_by=cols)
+        man = fresh.results["odd"].manifest
+        want = {
+            "/".join(str(row[c]) for c in cols): row["count"]
+            for row in snap.groupBy(*cols).count().collect()
+        }
+        assert man["partition_rows"] == want
+        assert man["rows"] == snap.count() == 6
+        resumed = StageRunner(spark, f"{work}/odd", {})
+        again = resumed.stage("odd", lambda: odd, partition_by=cols)
+        assert resumed.results["odd"].skipped
+        assert again.schema == snap.schema
+        assert sorted(map(tuple, again.collect()), key=str) == sorted(
+            map(tuple, snap.collect()), key=str)
+
+
+def _tags_stage(spark, base, run_fp, tags):
+    """One tiny StageRunner stage ``s`` under ``base``; returns its
+    StageResult and its sorted ``tag`` column."""
+    runner = StageRunner(spark, base, {"v": run_fp})
+    df = runner.stage(
+        "s",
+        lambda: spark.createDataFrame(
+            [(t, f"p{i % 2}") for i, t in enumerate(tags)],
+            "tag string, pred string",
+        ),
+        partition_by=["pred"],
+    )
+    return runner.results["s"], sorted(r.tag for r in df.collect())
+
+
+class TestCommit:
+    def test_zero_row_stages_run_and_resume(self, spark, tmp_path):
+        base = str(tmp_path / "empty")
+
+        def run():
+            runner = StageRunner(spark, base, {})
+            for name, part in (("part", ["pred"]), ("flat", None)):
+                df = runner.stage(
+                    name,
+                    lambda: spark.createDataFrame(
+                        [], "tag string, pred string"),
+                    partition_by=part,
+                )
+                assert df.count() == 0, name
+                assert df.columns == ["tag", "pred"], name
+            return runner.results
+
+        first, second = run(), run()
+        for name in ("part", "flat"):
+            assert not first[name].skipped and second[name].skipped
+            assert first[name].manifest["rows"] == 0
+            assert first[name].manifest["partition_rows"] == {}
+            assert second[name].df.schema == first[name].df.schema
+
+    def test_corrupt_manifest_is_cache_miss(self, spark, tmp_path):
+        import os
+
+        base = str(tmp_path / "corrupt")
+        res, tags = _tags_stage(spark, base, 1, ["a", "b", "c"])
+        path = os.path.join(base, "s", "_MANIFEST.json")
+        with open(path) as f:
+            text = f.read()
+        for bad in (text[: len(text) // 2], "", "[1, 2]"):
+            with open(path, "w") as f:
+                f.write(bad)
+            again, got = _tags_stage(spark, base, 1, ["a", "b", "c"])
+            assert not again.skipped and got == tags
+            assert again.manifest["rows"] == 3
+        assert _tags_stage(spark, base, 1, ["a", "b", "c"])[0].skipped
+
+    def test_kill_between_data_and_manifest(self, spark, tmp_path,
+                                            monkeypatch):
+        """A run killed after writing a stage's new data but before its
+        manifest must not leave the OLD manifest vouching for the NEW
+        data: the next run with the old fingerprint rebuilds."""
+        import os
+
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        class Killed(Exception):
+            pass
+
+        base = str(tmp_path / "kill")
+        manifest = os.path.join(base, "s", "_MANIFEST.json")
+        _tags_stage(spark, base, 1, ["old", "old"])
+        real_parquet = DataFrameWriter.parquet
+
+        def write_then_die(writer, *args, **kwargs):
+            real_parquet(writer, *args, **kwargs)
+            raise Killed
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", write_then_die)
+            with pytest.raises(Killed):
+                _tags_stage(spark, base, 2, ["new", "new", "new"])
+        assert not os.path.exists(manifest)
+        res, tags = _tags_stage(spark, base, 1, ["old", "old"])
+        assert not res.skipped and tags == ["old", "old"]
+        assert res.manifest["rows"] == 2
+
+    def test_new_transcripts_rebuild_every_stage(self, spark, frames,
+                                                 artifacts, tmp_path):
+        """An old work_dir run over a DIFFERENT transcripts table
+        rebuilds every stage instead of reusing the old triples."""
+        raw_pdf, _ = frames
+        convs = sorted(raw_pdf.conv_id.unique())
+        paths = {}
+        for side, keep in (("a", convs[::2]), ("b", convs[1::2])):
+            paths[side] = str(tmp_path / f"raw_{side}")
+            spark.createDataFrame(
+                raw_pdf[raw_pdf.conv_id.isin(keep)]
+            ).write.parquet(paths[side])
+        work = str(tmp_path / "work")
+        run_pipeline(spark, spark.read.parquet(paths["a"]), artifacts, work)
+        rb = run_pipeline(spark, spark.read.parquet(paths["b"]), artifacts,
+                          work)
+        assert not any(r.skipped for r in rb.results.values())
+        subjs = {r.subj for r in rb.results["s5_triples"].df.collect()}
+        assert subjs and subjs <= set(convs[1::2])
+        # the same files again: every stage resumes
+        rb2 = run_pipeline(spark, spark.read.parquet(paths["b"]), artifacts,
+                           work)
+        assert all(r.skipped for r in rb2.results.values())
 
 def test_assemble_docs_caps_oversized_conversations(spark):
     from coies_spark.pipeline.extract import assemble_docs
