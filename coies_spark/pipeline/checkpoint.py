@@ -17,10 +17,14 @@ A commit (:func:`commit_snapshot`) costs only its write: the snapshot
 is read back with the schema the frame already has (no inference job),
 and ``rows`` / ``partition_rows`` are summed from the committed files'
 parquet footers on the driver (no count or groupBy job).  Its order
-makes a kill at any point safe: the stale manifest goes first, the data
-is written to a sibling temp dir and swapped in, and the new manifest
-is written last through a temp file — so a manifest on disk always
-describes the data beside it, and a missing, truncated or unparseable
+makes a kill at any point safe: the data is written to a sibling temp
+dir, and only once that write has succeeded is the stale manifest
+removed and the temp dir swapped in; the new manifest is written last
+through a temp file.  So a manifest on disk always describes the data
+beside it: a failed or killed write leaves the old snapshot and its
+manifest in place (a folded ``upsert_beliefs`` store keeps its
+batches), and a kill in the short window between the swap and the new
+manifest leaves a cache miss.  A missing, truncated or unparseable
 manifest is a cache miss.
 
 On an Iceberg deployment this maps 1:1 to
@@ -58,8 +62,10 @@ def input_identity(df: Optional[DataFrame]) -> Optional[list]:
     """``[uri, size, mtime_ns]`` of each file ``df`` reads, for a run
     fingerprint: rewriting or swapping an input table changes it.
     Frames built in memory read no files, so their contents are not
-    covered (``[]``); a file off the local filesystem is identified by
-    its uri alone."""
+    covered (``[]``); nor is a filter, projection or join over the
+    same files (two ``where`` views of one table get the same
+    identity).  A file off the local filesystem is identified by its
+    uri alone."""
     if df is None:
         return None
     out = []
@@ -141,27 +147,30 @@ def commit_snapshot(
     """Write ``df`` as the stage's snapshot and return it read back,
     with the manifest as committed.
 
-    Order: remove the stale manifest; write to the sibling
-    ``data.tmp``; swap it in as ``data``; then, when ``manifest`` is
-    given, complete it with ``rows``, ``partition_rows`` and ``schema``
-    (plus ``wall_sec`` since ``started`` and ``written_at`` when
-    ``started`` is given) and write it through a temp file.  The write
-    is the only Spark job."""
+    Order: write to the sibling ``data.tmp`` and count its footers;
+    only then remove the stale manifest and swap ``data.tmp`` in as
+    ``data``; then, when ``manifest`` is given, complete it with
+    ``rows``, ``partition_rows`` and ``schema`` (plus ``wall_sec``
+    since ``started`` and ``written_at`` when ``started`` is given) and
+    write it through a temp file.  A write that fails leaves the old
+    data and its manifest in place, so the old snapshot still resumes;
+    only a kill between the swap and the new manifest leaves a cache
+    miss.  The write is the only Spark job."""
     data_path = os.path.join(stage_dir, "data")
     manifest_path = os.path.join(stage_dir, MANIFEST)
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(manifest_path)
     tmp = data_path + ".tmp"
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
+    rows, lineage = _footer_counts(tmp, partition_by)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(manifest_path)
     shutil.rmtree(data_path, ignore_errors=True)
     os.replace(tmp, data_path)
     out = spark.read.schema(df.schema).parquet(data_path)
     if manifest is None:
         return out, None
-    rows, lineage = _footer_counts(data_path, partition_by)
     manifest = {
         **manifest,
         "rows": rows,

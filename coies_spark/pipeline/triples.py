@@ -83,8 +83,10 @@ def run_pipeline(
     ``transcripts``, ``tagged_transcripts`` and ``dictionary`` tables,
     so changing any parameter or rewriting an input file invalidates
     the snapshots of an old ``work_dir``.  An input built in memory
-    (``createDataFrame``) reads no files: its contents are NOT covered,
-    so give such a run a fresh ``work_dir`` when its rows change.
+    (``createDataFrame``) reads no files: its contents are NOT covered.
+    Nor is a filter, projection or join over the same files: two
+    ``where`` views of one table fingerprint alike.  Give such a run a
+    fresh ``work_dir`` when its rows change.
 
     ``assemble_strategy="join"`` keeps assembly shuffle-free over
     co-bucketed input tables (sources/bucketed.py); the default union
@@ -215,11 +217,15 @@ def upsert_beliefs(
 
     Each snapshot is committed through ``checkpoint.commit_snapshot``,
     the routine a fresh ``StageRunner`` stage uses (Iceberg snapshot
-    commit in the production profile): stale manifest removed, merged
-    snapshot written to a sibling temp dir and swapped in, manifest
-    rewritten last with footer-read ``rows`` / ``partition_rows`` and
-    the new schema — so ``StageRunner.metrics()`` and lineage describe
-    the post-upsert store, and a kill mid-commit leaves a cache miss.
+    commit in the production profile): merged snapshot written to a
+    sibling temp dir, then stale manifest removed and temp dir swapped
+    in, manifest rewritten last with footer-read ``rows`` /
+    ``partition_rows`` and the new schema — so ``StageRunner.metrics()`` and lineage describe
+    the post-upsert store.  A write that fails leaves the old snapshot
+    and its manifest in place, so the folded batches survive and a
+    later resume still sees them; only a kill between the data swap
+    and the new manifest leaves a cache miss (the stage is rebuilt
+    from s6 without the folded batches).
     The old snapshot is read with its manifest's schema, so each
     snapshot's write is the only Spark job the upsert runs.  The merged
     beliefs are projected back to the stage's FRESH-RUN columns (so a

@@ -301,12 +301,16 @@ class TestCommit:
 
     def test_kill_between_data_and_manifest(self, spark, tmp_path,
                                             monkeypatch):
-        """A run killed after writing a stage's new data but before its
-        manifest must not leave the OLD manifest vouching for the NEW
-        data: the next run with the old fingerprint rebuilds."""
+        """A write that dies keeps the OLD data and manifest, which
+        still resume; a kill after the new data is swapped in but
+        before its manifest must not leave the OLD manifest vouching
+        for the NEW data: the next run with the old fingerprint
+        rebuilds."""
         import os
 
         from pyspark.sql.readwriter import DataFrameWriter
+
+        from coies_spark.pipeline import checkpoint
 
         class Killed(Exception):
             pass
@@ -322,6 +326,21 @@ class TestCommit:
 
         with monkeypatch.context() as m:
             m.setattr(DataFrameWriter, "parquet", write_then_die)
+            with pytest.raises(Killed):
+                _tags_stage(spark, base, 2, ["new", "new", "new"])
+        res, tags = _tags_stage(spark, base, 1, ["old", "old"])
+        assert res.skipped and tags == ["old", "old"]
+
+        real_replace = os.replace
+
+        def swap_then_die(src, dst):
+            # the data swap goes through; the manifest's replace dies
+            if dst == manifest:
+                raise Killed
+            real_replace(src, dst)
+
+        with monkeypatch.context() as m:
+            m.setattr(checkpoint.os, "replace", swap_then_die)
             with pytest.raises(Killed):
                 _tags_stage(spark, base, 2, ["new", "new", "new"])
         assert not os.path.exists(manifest)
@@ -614,7 +633,8 @@ class TestBeliefStages:
 
 class TestBeliefUpsert:
     def test_upsert_matches_full_recompute(self, spark, spark_transcripts,
-                                           artifacts, tmp_path):
+                                           artifacts, tmp_path,
+                                           monkeypatch):
         from pyspark.sql import functions as F
 
         from coies_spark.pipeline.triples import upsert_beliefs
@@ -658,7 +678,8 @@ class TestBeliefUpsert:
         import json
         import os
 
-        assert not os.path.exists(f"{w1}/s7_beliefs/data_upsert")
+        assert not os.path.exists(f"{w1}/s7_beliefs/data.tmp")
+        assert not os.path.exists(f"{w1}/s8_temporal/data.tmp")
         with open(f"{w1}/s7_beliefs/_MANIFEST.json") as f:
             man = json.load(f)
         assert man["rows"] == up_beliefs.count()
@@ -667,6 +688,24 @@ class TestBeliefUpsert:
         # fresh-run and upserted snapshots have the SAME schema (the
         # merge's n_windows bookkeeping column is projected away)
         assert again.columns == rf.results["s7_beliefs"].df.columns
+
+        # an upsert whose write fails keeps the folded store and its
+        # manifests: the next resume still sees batch 2
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        def fail(*args, **kwargs):
+            raise OSError("disk full")
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", fail)
+            with pytest.raises(OSError):
+                upsert_beliefs(spark, w1, ev2)
+        resumed = run_pipeline(spark, b1, artifacts, w1, with_beliefs=True)
+        assert all(r.skipped for r in resumed.results.values())
+        assert rows(resumed.results["s7_beliefs"].df, bcols) \
+            == rows(up_beliefs, bcols)
+        assert rows(resumed.results["s8_temporal"].df, tcols) \
+            == rows(up_temporal, tcols)
 
     def test_upsert_exact_on_overlapping_keys(self, spark, tmp_path):
         """The drift counterexample: the same (subj, pred, obj) key
@@ -712,7 +751,8 @@ class TestBeliefUpsert:
         assert got[("s1", "comp", "acme")] == 0.944444
         # upserted snapshot keeps the fresh-run schema (incl. lg_sum)
         assert sorted(up_b.columns) == sorted(full_b.columns)
-        assert not os.path.exists(f"{w}/s7_beliefs/data_upsert")
+        assert not os.path.exists(f"{w}/s7_beliefs/data.tmp")
+        assert not os.path.exists(f"{w}/s8_temporal/data.tmp")
         tcols = ["subj", "pred", "obj", "version", "valid_from",
                  "valid_to", "is_current"]
         full_t = temporal_triples(
